@@ -242,7 +242,8 @@ _PINNED_FLAGSHIP = (
 )
 
 # 35 ops graded in the round-4 window (driver rows earned; now queued
-# after the round-5 window)
+# after the round-5 window); pack_sequences is re-graded in _REGRADE_R5
+# and listed there only
 _ROTATION_R4 = (
     "containment_dedup",
     "adaptive_crawl_delay",
@@ -273,7 +274,6 @@ _ROTATION_R4 = (
     "image_cluster_reps",
     "redirect_resolution",
     "anchor_text_topk",
-    "pack_sequences",
     "image_batch_buckets",
     "boilerplate_strip",
     "crawl_tiers",
@@ -379,6 +379,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     allq = {**entry_only, **ops.all_queries()}
     ordered = _PINNED_FLAGSHIP + _ROTATION_R5 + _REGRADE_R5 + _ROTATION_R4
+    # a name listed twice would silently shorten the graded window
+    assert len(ordered) == len(set(ordered)), "duplicate names in the graded window"
     out = {name: allq[name] for name in ordered}
     # already-graded rows displaced from the window, then the subsumed
     # intermediates last

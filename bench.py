@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the frontier
-scheduling-round throughput (the BASELINE.json north metric).  Prints
+scheduling-round throughput (the BASELINE.json north metric), the
+image-validation round and the decode-once curation round.  Prints
 ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -188,23 +189,25 @@ def main() -> None:
     for name in HEADLINE:
         print(f"# {name}: {timings[name]}s", file=sys.stderr)
 
-    # frontier scheduling-round throughput (north metric) — seen/store
-    # stored BUCKETED on their join keys (the 100 TB co-located-join
-    # layout): the per-round anti-join and fetch join read them with no
-    # exchange; only the candidate batch shuffles
+    # frontier scheduling-round throughput (north metric): the engine's
+    # own round (engine.schedule_round) against seen/store stored
+    # BUCKETED on their join keys (the 100 TB co-located-join layout).
+    # With shuffle.partitions equal to the bucket count, the candidate
+    # exchange co-partitions with both tables: the per-round anti-join
+    # and fetch join read them with no exchange, only the candidate
+    # batch shuffles
     from grabspark import bench_core
 
     base = tempfile.mkdtemp(prefix="grabspark-bench-")
-    # hashed seen layout (r4): the anti-join probes the 8-byte
-    # xxhash64(url_canon) key; the string column stays in the table for
-    # audit but is pruned from the probe scan
+    old_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(bench_core.N_BUCKETS))
     bench_core.write_bucketed(
-        bench_core.synth_seen_hash_df(spark, FRONTIER_N, FRONTIER_N, 1024),
-        "seen_b", os.path.join(base, "seen_tbl"), ["key_hash"],
+        bench_core.synth_seen_df(spark, FRONTIER_N, FRONTIER_N, 1024),
+        "seen_b", os.path.join(base, "seen_tbl"), ["url_canon"],
     )
     bench_core.write_bucketed(
-        bench_core.synth_store_hash_df(spark, FRONTIER_N // 2, FRONTIER_N, 1024),
-        "store_b", os.path.join(base, "store_tbl"), ["fkey_hash"],
+        bench_core.synth_store_df(spark, FRONTIER_N // 2, FRONTIER_N, 1024),
+        "store_b", os.path.join(base, "store_tbl"), ["image_id"],
     )
     seen_path, store_path = "table:seen_b", "table:store_b"
     from grabspark.bloom import bloom_bits_for
@@ -222,6 +225,7 @@ def main() -> None:
         ),
         key=lambda r: r.urls_per_sec,
     )
+    spark.conf.set("spark.sql.shuffle.partitions", old_partitions)
     print(
         f"# frontier: {fr.n_frontier} urls in {fr.elapsed_sec:.2f}s = "
         f"{fr.urls_per_sec:,.0f} urls/s ({fr.scheduled} scheduled)",
@@ -273,7 +277,7 @@ def main() -> None:
 
     total = round(sum(timings.values()) + fr.elapsed_sec + ir.elapsed_sec + dr.composed_sec, 3)
     out = {
-        "metric": "headline_ops_total+frontier_round+image_round",
+        "metric": "headline_ops_total+frontier_round+image_round+decode_once_round",
         "value": total,
         "unit": "sec",
         "queries": timings,

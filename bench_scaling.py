@@ -17,7 +17,6 @@ Modes:
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import subprocess
@@ -58,10 +57,6 @@ def _session(cores: int, app: str, shuffle_partitions: int = 64):
         # differs; partition count tracks DATA size (meta.json), never
         # core count
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # high-cardinality equi-joins (seen anti-join, fetch lookup) build
-        # bounded per-partition hash maps instead of sorting both sides
-        # every round — partitions are ~n/64 rows, well inside memory
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         # always honor the bucketed layout of seen_b/store_b — the
         # DisableUnnecessaryBucketedScan heuristic must not re-shuffle
         # the 10^10-row side of the round's joins
@@ -81,7 +76,7 @@ def _session(cores: int, app: str, shuffle_partitions: int = 64):
     return spark
 
 
-def prepare(data_dir: str, n_frontier: int, layout: str = "hash") -> None:
+def prepare(data_dir: str, n_frontier: int) -> None:
     from grabspark import bench_core
     from grabspark.bloom import bloom_bits_for
 
@@ -99,30 +94,14 @@ def prepare(data_dir: str, n_frontier: int, layout: str = "hash") -> None:
     # big join sides stored BUCKETED on their join keys (the 100 TB
     # layout): per-round joins then read them pre-partitioned — only the
     # candidate side ever shuffles
-    # layout="hash" (default, r4): seen bucketed on xxhash64(url_canon)
-    # — the anti-join probes 8 B/row instead of the URL string (the
-    # string stays in the files for audit, pruned from the probe scan).
-    # layout="string" preserved for A/B against the r3 measurements.
-    if layout == "hash":
-        bench_core.write_bucketed(
-            bench_core.synth_seen_hash_df(spark, n_frontier, n_frontier, 1024),
-            "seen_b", os.path.join(data_dir, "seen_tbl"), ["key_hash"], n_buckets,
-        )
-    else:
-        bench_core.write_bucketed(
-            bench_core.synth_seen_df(spark, n_frontier, n_frontier, 1024),
-            "seen_b", os.path.join(data_dir, "seen_tbl"), ["url_canon"], n_buckets,
-        )
-    if layout == "hash":
-        bench_core.write_bucketed(
-            bench_core.synth_store_hash_df(spark, n_frontier // 2, n_frontier, 1024),
-            "store_b", os.path.join(data_dir, "store_tbl"), ["fkey_hash"], n_buckets,
-        )
-    else:
-        bench_core.write_bucketed(
-            bench_core.synth_store_df(spark, n_frontier // 2, n_frontier, 1024),
-            "store_b", os.path.join(data_dir, "store_tbl"), ["image_id"], n_buckets,
-        )
+    bench_core.write_bucketed(
+        bench_core.synth_seen_df(spark, n_frontier, n_frontier, 1024),
+        "seen_b", os.path.join(data_dir, "seen_tbl"), ["url_canon"], n_buckets,
+    )
+    bench_core.write_bucketed(
+        bench_core.synth_store_df(spark, n_frontier // 2, n_frontier, 1024),
+        "store_b", os.path.join(data_dir, "store_tbl"), ["image_id"], n_buckets,
+    )
     bl = bench_core.build_seen_bloom(spark, "table:seen_b", n_bits=n_bits)
     bl.save(os.path.join(data_dir, "bloom"))
     with open(os.path.join(data_dir, "meta.json"), "w") as f:
@@ -131,7 +110,6 @@ def prepare(data_dir: str, n_frontier: int, layout: str = "hash") -> None:
                 "n_frontier": n_frontier,
                 "n_buckets": n_buckets,
                 "bloom_bits": n_bits,
-                "layout": layout,
             },
             f,
         )
@@ -156,33 +134,20 @@ def measure(data_dir: str, cores: int, out: str) -> None:
     from grabspark import bench_core
     from grabspark.bloom import ShardedBloom
 
-    seen_ddl = (
-        bench_core.SEEN_HASH_TBL_DDL
-        if meta.get("layout", "string") == "hash"
-        else bench_core.SEEN_TBL_DDL
+    bench_core.attach_bucketed(
+        spark, "seen_b", bench_core.SEEN_TBL_DDL, os.path.join(data_dir, "seen_tbl"), n_buckets
     )
     bench_core.attach_bucketed(
-        spark, "seen_b", seen_ddl, os.path.join(data_dir, "seen_tbl"), n_buckets
-    )
-    store_ddl = (
-        bench_core.STORE_HASH_TBL_DDL
-        if meta.get("layout", "string") == "hash"
-        else bench_core.STORE_TBL_DDL
-    )
-    bench_core.attach_bucketed(
-        spark, "store_b", store_ddl, os.path.join(data_dir, "store_tbl"), n_buckets
+        spark, "store_b", bench_core.STORE_TBL_DDL, os.path.join(data_dir, "store_tbl"), n_buckets
     )
     seen = "table:seen_b"
     store = "table:store_b"
     bl = ShardedBloom.load(os.path.join(data_dir, "bloom"))
     # warm-up on the same key lattice as the full round
     bench_core.run_frontier_round(
-        spark, n_frontier // 4, seen, store, bl, space_unit=n_frontier,
-        n_partitions=n_buckets,
+        spark, n_frontier // 4, seen, store, bl, space_unit=n_frontier
     )
-    r = bench_core.run_frontier_round(
-        spark, n_frontier, seen, store, bl, n_partitions=n_buckets
-    )
+    r = bench_core.run_frontier_round(spark, n_frontier, seen, store, bl)
     payload = {
         "cores": cores,
         "n_frontier": r.n_frontier,
@@ -193,162 +158,6 @@ def measure(data_dir: str, cores: int, out: str) -> None:
     with open(out, "w") as f:
         json.dump(payload, f)
     print(f"# cores={cores}: {r.elapsed_sec:.2f}s = {r.urls_per_sec:,.0f} urls/s", file=sys.stderr)
-
-
-def measure_breakdown(data_dir: str, cores: int, out: str) -> None:
-    """Stage-prefix timings + a pure-CPU calibration in one JVM.
-
-    calibration: zero-shuffle, zero-Python, embarrassingly parallel
-    codegen job (chained xxhash64 over range) — its N->4N ratio is the
-    BOX's scaling ceiling (SMT siblings + hypervisor steal), independent
-    of anything this engine does.  Stages: dedupe -> antijoin -> budget
-    -> full; per-stage cost = consecutive prefix difference."""
-    import time
-
-    meta = _read_meta(data_dir)
-    n_frontier, n_buckets = meta["n_frontier"], meta["n_buckets"]
-    spark = _session(cores, f"grabspark-breakdown-{cores}", shuffle_partitions=n_buckets)
-    from grabspark import bench_core
-    from grabspark.bloom import ShardedBloom
-
-    seen_ddl = (
-        bench_core.SEEN_HASH_TBL_DDL
-        if meta.get("layout", "string") == "hash"
-        else bench_core.SEEN_TBL_DDL
-    )
-    bench_core.attach_bucketed(
-        spark, "seen_b", seen_ddl, os.path.join(data_dir, "seen_tbl"), n_buckets
-    )
-    store_ddl = (
-        bench_core.STORE_HASH_TBL_DDL
-        if meta.get("layout", "string") == "hash"
-        else bench_core.STORE_TBL_DDL
-    )
-    bench_core.attach_bucketed(
-        spark, "store_b", store_ddl, os.path.join(data_dir, "store_tbl"), n_buckets
-    )
-    bl = ShardedBloom.load(os.path.join(data_dir, "bloom"))
-    calib_n = 8_000_000_000  # ~5s at 32 cores: long enough to dwarf task-scheduling overhead
-    # bit_xor, not sum: summing 1e9 random int64s overflows under ANSI
-    hashchain = "bit_xor(xxhash64(xxhash64(xxhash64(id))))"
-    spark.range(calib_n // 4, numPartitions=cores * 4).selectExpr(hashchain).collect()
-    t0 = time.time()
-    spark.range(calib_n, numPartitions=cores * 4).selectExpr(hashchain).collect()
-    calib_sec = time.time() - t0
-    # warm-up on the same key lattice as the measured stages
-    bench_core.run_frontier_round(
-        spark, n_frontier // 4, "table:seen_b", "table:store_b", bl, space_unit=n_frontier,
-        n_partitions=n_buckets,
-    )
-    stages = {}
-    for stage in ("dedupe", "antijoin", "budget", "full"):
-        r = bench_core.run_frontier_round(
-            spark, n_frontier, "table:seen_b", "table:store_b", bl, stage=stage,
-            n_partitions=n_buckets,
-        )
-        stages[stage] = round(r.elapsed_sec, 3)
-    payload = {"cores": cores, "n_frontier": n_frontier,
-               "calib_sec": round(calib_sec, 3), "stages": stages}
-    with open(out, "w") as f:
-        json.dump(payload, f)
-    print(f"# breakdown cores={cores}: calib={calib_sec:.2f}s stages={stages}", file=sys.stderr)
-
-
-def orchestrate_breakdown(n_frontier: int, trials: int, lo: int = 8, hi: int = 32, layout: str = "hash") -> None:
-    """Interleaved stage-breakdown at (lo, hi): per-stage best-of scaling
-    efficiency plus the pure-CPU calibration ceiling, committed as
-    BENCH/scaling_breakdown_{lo}_{hi}.json + BENCH/SCALING_BD_RUN_{lo}_{hi}.md
-    (auto-template — never the curated SCALING_{lo}_{hi}.md, which carries the
-    hand-analyzed numbers and must survive re-runs)."""
-    from grabspark.session import package_zip
-
-    zpath = package_zip()
-    data_dir = tempfile.mkdtemp(prefix="grabspark-bd-data-")
-    _submit(["--prepare", "--data", data_dir, "--n-frontier", str(n_frontier), "--layout", layout], 32, zpath)
-    runs: dict[int, list[dict]] = {lo: [], hi: []}
-    outdir = tempfile.mkdtemp(prefix="grabspark-bd-out-")
-    for trial in range(trials):
-        for cores in (lo, hi):
-            out = os.path.join(outdir, f"bd-t{trial}-c{cores}.json")
-            _submit(["--measure-breakdown", "--data", data_dir,
-                     "--cores", str(cores), "--out", out], cores, zpath)
-            with open(out) as f:
-                runs[cores].append(json.load(f))
-    aggregate_breakdown(runs, n_frontier, trials, lo, hi)
-
-
-def aggregate_breakdown(runs: dict[int, list[dict]], n_frontier: int,
-                        trials: int, lo: int, hi: int) -> None:
-    factor = hi / lo
-    # per-stage numbers must come from ONE trial (the best-by-full-round
-    # one): mixing the per-stage minima across trials can invert prefix
-    # order under this box's 5-10x steal variance (a fast "budget" from a
-    # calm window vs a stolen "full" from a noisy one)
-    best = {c: min(runs[c], key=lambda r: r["stages"]["full"])["stages"] for c in (lo, hi)}
-    calib = {c: min(r["calib_sec"] for r in runs[c]) for c in (lo, hi)}
-    order = ["dedupe", "antijoin", "budget", "full"]
-    deltas = {}
-    for c in (lo, hi):
-        prev = 0.0
-        deltas[c] = {}
-        for k in order:
-            deltas[c][k] = round(max(best[c][k] - prev, 0.0), 3)
-            prev = best[c][k]
-    stage_eff = {
-        k: round(deltas[lo][k] / (factor * deltas[hi][k]), 3) if deltas[hi][k] > 0 else None
-        for k in order
-    }
-    summary = {
-        "n_frontier": n_frontier,
-        "cores": {"N": lo, "4N": hi},
-        "calibration_sec": {str(lo): calib[lo], str(hi): calib[hi]},
-        "calibration_efficiency": round(calib[lo] / (factor * calib[hi]), 3),
-        "full_round_sec": {str(lo): best[lo]["full"], str(hi): best[hi]["full"]},
-        "full_round_efficiency": round(best[lo]["full"] / (factor * best[hi]["full"]), 3),
-        "stage_prefix_sec": {str(c): best[c] for c in (lo, hi)},
-        "stage_delta_sec": {str(c): deltas[c] for c in (lo, hi)},
-        "stage_efficiency": stage_eff,
-        "all_runs": {str(c): runs[c] for c in (lo, hi)},
-    }
-    print(json.dumps(summary))
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", f"scaling_breakdown_{lo}_{hi}.json"), "w") as f:
-        json.dump(summary, f, indent=1)
-    with open(os.path.join(REPO, "BENCH", f"SCALING_BD_RUN_{lo}_{hi}.md"), "w") as f:
-        f.write(f"""# ({lo},{hi}) scaling: hardware ceiling + stage breakdown
-
-The ({lo},{hi}) core pair oversubscribes this box: 32 vCPUs map onto
-~16-21 effective physical cores (round-1 busy-loop characterization), so
-a PERFECTLY scaling job cannot show 4x from {lo}->{hi} threads.  The
-calibration row measures that ceiling directly — a zero-shuffle,
-zero-Python, zero-join whole-stage-codegen hash chain
-(`bit_xor(xxhash64^3(id))` over `spark.range`) whose only limit is the
-CPU the hypervisor actually delivers.
-
-| job | local[{lo}] best (s) | local[{hi}] best (s) | {lo}->{hi} efficiency |
-|---|---|---|---|
-| pure-CPU calibration (ceiling) | {calib[lo]} | {calib[hi]} | **{summary['calibration_efficiency']}** |
-| full frontier round | {best[lo]['full']} | {best[hi]['full']} | **{summary['full_round_efficiency']}** |
-
-Reading: compare the full-round efficiency against the calibration
-ceiling — the ceiling is the best ANY job can do on this pair; the
-criterion-grade measurement is the (2,8) pair, both configs inside
-physical cores and below the memory-bandwidth wall
-(BENCH/BASELINE.md).  This generated
-file is a template; the committed SCALING_8_32.md carries the analyzed
-version with the measured numbers in context.
-
-Stage-prefix raw data (each prefix ends in one count action; separate
-measured runs inside one JVM, {trials} interleaved fresh-JVM trials per
-config; steal bursts of 5-10x can strike mid-JVM, so treat per-stage
-DELTAS as indicative only — prefix inversions in noisy windows are the
-variance, not the pipeline):
-
-- prefix seconds (best trial by full-round time): {json.dumps(summary['stage_prefix_sec'])}
-- per-stage deltas from that trial: {json.dumps(summary['stage_delta_sec'])}
-- per-stage efficiency (None where the delta degenerates): {json.dumps(stage_eff)}
-- all trials: see scaling_breakdown_{lo}_{hi}.json `all_runs`.
-""")
 
 
 def _submit(args: list[str], cores: int, zpath: str) -> None:
@@ -365,7 +174,7 @@ def _submit(args: list[str], cores: int, zpath: str) -> None:
     subprocess.run(cmd, check=True)
 
 
-def orchestrate(n_frontier: int, trials: int, lo: int = 4, hi: int = 16, layout: str = "hash") -> None:
+def orchestrate(n_frontier: int, trials: int, lo: int = 4, hi: int = 16) -> None:
     """Interleaved single-JVM measurements (lo, hi, lo, hi, ...), scored
     best-of per config.  Best-of is the honest scorer on this box: the
     hypervisor steals up to ~10x of effective CPU in bursts, so the best
@@ -379,7 +188,7 @@ def orchestrate(n_frontier: int, trials: int, lo: int = 4, hi: int = 16, layout:
 
     zpath = package_zip()
     data_dir = tempfile.mkdtemp(prefix="grabspark-scaling-data-")
-    _submit(["--prepare", "--data", data_dir, "--n-frontier", str(n_frontier), "--layout", layout], 32, zpath)
+    _submit(["--prepare", "--data", data_dir, "--n-frontier", str(n_frontier)], 32, zpath)
     runs: dict[int, list[dict]] = {lo: [], hi: []}
     outdir = tempfile.mkdtemp(prefix="grabspark-scaling-out-")
     for trial in range(trials):
@@ -480,10 +289,8 @@ URL, /root/reference/functions/main_functions.go:39) on one thread.
 if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--orchestrate", action="store_true")
-    ap.add_argument("--breakdown", action="store_true")
     ap.add_argument("--prepare", action="store_true")
     ap.add_argument("--measure", action="store_true")
-    ap.add_argument("--measure-breakdown", action="store_true")
     ap.add_argument("--data", default=None)
     ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--n-frontier", type=int, default=16_000_000)
@@ -492,17 +299,11 @@ if __name__ == "__main__":
     # cores; every interleaved pair passed >=0.8 at these defaults (r3)
     ap.add_argument("--lo", type=int, default=2)
     ap.add_argument("--hi", type=int, default=8)
-    ap.add_argument("--layout", default="hash", choices=["hash", "string"],
-                    help="seen-table key layout: 8B xxhash64 (default) or url string (r3 A/B)")
     ap.add_argument("--out", default="/tmp/scaling.json")
     args = ap.parse_args()
     if args.orchestrate:
-        orchestrate(args.n_frontier, args.trials, args.lo, args.hi, args.layout)
-    elif args.breakdown:
-        orchestrate_breakdown(args.n_frontier, args.trials, args.lo, args.hi, args.layout)
+        orchestrate(args.n_frontier, args.trials, args.lo, args.hi)
     elif args.prepare:
-        prepare(args.data, args.n_frontier, args.layout)
-    elif args.measure_breakdown:
-        measure_breakdown(args.data, args.cores, args.out)
+        prepare(args.data, args.n_frontier)
     else:
         measure(args.data, args.cores, args.out)

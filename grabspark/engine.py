@@ -11,7 +11,7 @@ per-seed seen reset), and the sequential order is carried by ordering
 columns ``(seed_idx, parent_seq, link_idx)`` rather than by sequential
 execution (SURVEY.md §3.1).
 
-Round dataflow:
+Round dataflow (the first four steps are ``schedule_round``):
     frontier_r
       -> A1 within-round first-occurrence dedupe        (groupBy + min_by)
       -> J2 Bloom prefilter (advisory)                   (broadcast + Arrow UDF)
@@ -35,10 +35,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from . import robots as robots_mod
 from . import seq as seq_mod
@@ -63,6 +61,145 @@ def _drain_futures(*futs) -> None:
                 f.result()
             except Exception:
                 pass
+
+
+def bloom_key():
+    """Seen-filter key: one entry per (seed_idx, url_canon)."""
+    return F.concat_ws("\x1f", F.col("seed_idx").cast("string"), F.col("url_canon"))
+
+
+def schedule_round(
+    frontier: DataFrame,
+    seen: DataFrame,
+    cfg: EngineConfig,
+    rules: DataFrame | None = None,
+    flt=None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """One round's scheduling dataflow: A1 dedupe -> J2 prefilter -> J1
+    anti-join -> X3 robots -> W1 budget.  Returns ``(scheduled,
+    deferred)``; ``deferred`` is None unless ``cfg.budget_mode`` is
+    "per_host".
+
+    ``frontier`` rows need seed_idx, url_canon, host, parent_seq and
+    link_idx (other columns ride along); ``seen`` needs seed_idx and
+    url_canon.  ``rules`` is the robots table or None.  ``flt`` is the J2
+    probe: None (no prefilter), a broadcast membership UDF
+    (``bloom.make_might_contain``), or a partitioned filter
+    (``PartitionedBloom`` / ``PartitionedCuckoo``)."""
+    # ONE candidate exchange per round (but see the broadcast Bloom
+    # form below): hash-partition on url_canon
+    # alone (default shuffle.partitions), which satisfies both the
+    # dedupe groupBy's (seed_idx, url_canon) clustered distribution
+    # (subset key) and the seen anti-join's co-partitioning — without
+    # it Catalyst re-shuffles the deduped candidates a second time
+    # for the join (the r3 scaling breakdown's 0.30-efficiency stage).
+    # A seen table bucketed on url_canon into shuffle.partitions buckets
+    # is then joined with no seen-side exchange either.
+    cand = dedupe_first_occurrence(frontier.repartition("url_canon"))
+    seen = seen.select("seed_idx", "url_canon")
+    if flt is None:
+        survivors = cand.join(seen, ["seed_idx", "url_canon"], "left_anti")
+    elif callable(flt):
+        # broadcast mode folds the Bloom verdict INTO the anti-join
+        # condition: a left-anti row survives when no seen row
+        # matches (keys AND _maybe_seen), so bloom-negatives pass
+        # through without probing the join hash table — identical
+        # rows to the split form but one streaming pipeline with no
+        # persist (the split's full-batch materialization was the
+        # measured 16-thread memory wall; BENCH/BASELINE.md).  The Arrow
+        # UDF node does not keep its child's partitioning, so in this
+        # mode the anti-join plans a second candidate exchange.
+        t = cand.withColumn("_maybe_seen", flt(bloom_key()))
+        survivors = t.join(
+            seen,
+            (t["seed_idx"] == seen["seed_idx"])
+            & (t["url_canon"] == seen["url_canon"])
+            & t["_maybe_seen"],
+            "left_anti",
+        ).drop("_maybe_seen")
+    else:
+        # partitioned mode keeps the split+persist form: the probe
+        # repartitions on the key's SHARD (co-partitioned with the
+        # filter files), so bloom-negative rows must be separated
+        # BEFORE the anti-join or the whole batch would pay a second
+        # exchange back to url_canon; persist stops the two branches
+        # recomputing the dedupe/probe chain
+        from .bloom import partitioned_prefilter
+
+        tagged = partitioned_prefilter(
+            cand, bloom_key(), flt, frontier.sparkSession, out_col="_maybe_seen"
+        ).persist()
+        sure_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+        survivors = sure_new.unionByName(
+            maybe.join(seen, ["seed_idx", "url_canon"], "left_anti")
+        )
+
+    if rules is not None:
+        survivors = robots_mod.apply_robots(survivors, rules)
+    if cfg.budget_mode == "per_host":
+        return _schedule_budget(survivors, cfg, rules)
+    return survivors, None
+
+
+def _schedule_budget(
+    survivors: DataFrame, cfg: EngineConfig, rules: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """W1: per-host priority rank + crawl-delay budget (north_rule): the
+    budget is fetches allowed per scheduling tick, max(1,
+    tick_seconds / crawl_delay); rank order is the global FIFO
+    priority (seed_idx, parent_seq, link_idx) [REF ordering].
+
+    Scale shape: the budget only BINDS on hosts holding more rows
+    than their budget — everything else is scheduled whole with no
+    window at all (no sort, no skewed straggler).  Over-budget hosts
+    take the salted two-phase top-k (phase 1 bounds every window
+    partition to <= budget rows; the hot host costs salt_buckets
+    parallel sorts plus one bounded merge); their unscheduled rows
+    defer to the next round via an anti-join on the (small,
+    broadcastable) scheduled set."""
+    if rules is not None:
+        delays = robots_mod.host_delays(rules, cfg.default_crawl_delay)
+        survivors = survivors.join(F.broadcast(delays), "host", "left")
+        delay = F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_crawl_delay))
+    else:
+        delay = F.lit(cfg.default_crawl_delay)
+    budget = F.greatest(F.lit(1), F.floor(F.lit(cfg.tick_seconds) / delay)).cast("int")
+    # per-host row counts: NO broadcast hint — at web scale the host
+    # dimension is 10^7+, so AQE must pick broadcast vs shuffle from
+    # the actual aggregate size (tiny here, huge in production)
+    counts = survivors.groupBy("host").agg(F.count(F.lit(1)).alias("_hn"))
+    s = (
+        survivors.withColumn("_budget", budget)
+        .join(counts, "host")
+        .persist()
+    )
+    drop_cols = ["_budget", "_hn"] + (["crawl_delay"] if rules is not None else [])
+    light = s.filter(F.col("_hn") <= F.col("_budget")).drop(*drop_cols)
+    heavy = s.filter(F.col("_hn") > F.col("_budget"))
+    salt = F.pmod(F.xxhash64("url_canon"), F.lit(cfg.salt_buckets))
+    w1 = Window.partitionBy("host", "_salt").orderBy("seed_idx", "parent_seq", "link_idx")
+    phase1 = (
+        heavy.withColumn("_salt", salt)
+        .withColumn("_rk1", F.row_number().over(w1))
+        .filter(F.col("_rk1") <= F.col("_budget"))
+    )
+    w2 = Window.partitionBy("host").orderBy("seed_idx", "parent_seq", "link_idx")
+    sched_heavy = (
+        phase1.withColumn("_rk2", F.row_number().over(w2))
+        .filter(F.col("_rk2") <= F.col("_budget"))
+        .drop("_salt", "_rk1", "_rk2")
+    )
+    # scheduled-heavy keys are budget-bounded per host; AQE picks
+    # broadcast when they fit (no hard hint — heavy-host count is
+    # unbounded in principle)
+    deferred = heavy.join(
+        sched_heavy.select("seed_idx", "url_canon"),
+        ["seed_idx", "url_canon"],
+        "left_anti",
+    ).drop(*drop_cols)
+    sched = light.unionByName(sched_heavy.drop(*drop_cols))
+    return sched, deferred
 
 
 @dataclass
@@ -236,7 +373,7 @@ class CrawlEngine:
         bloom_v = int(meta["bloom_v"])
         if isinstance(self.pbloom, PartitionedCuckoo):
             bloom_v = self.pbloom.delete(
-                expired.withColumn("_bk", self._bloom_key()), "_bk"
+                expired.withColumn("_bk", bloom_key()), "_bk"
             )
         elif self.pbloom is not None:
             raise ValueError(
@@ -246,7 +383,7 @@ class CrawlEngine:
         elif self.bloom is not None:
             fresh = ShardedBloom(self.bloom.n_bits, self.bloom.n_hashes, self.bloom.n_shards)
             partials = build_partials(
-                self.seen.read(seen_v).withColumn("_bk", self._bloom_key()),
+                self.seen.read(seen_v).withColumn("_bk", bloom_key()),
                 "_bk", fresh.n_bits, fresh.n_hashes, fresh.n_shards,
             ).collect()
             merge_partials_into(fresh, partials)
@@ -307,103 +444,38 @@ class CrawlEngine:
     def _bloom_dir(self, v: int) -> str:
         return os.path.join(self.cfg.run_dir, "bloom", f"v{v}")
 
-    @staticmethod
-    def _bloom_key():
-        return F.concat_ws("\x1f", F.col("seed_idx").cast("string"), F.col("url_canon"))
+    def _bloom_probe(self):
+        """Broadcast membership UDF over the current filter.  The previous
+        round's broadcast is destroyed before a new one is created (no
+        broadcast accretion over a long crawl)."""
+        from .bloom import make_might_contain
 
-    def _bloom_might_contain(self, df: DataFrame) -> DataFrame:
-        """Adds ``_maybe_seen``: broadcast membership UDF, or the
-        shard-co-partitioned probe in partitioned mode.  The previous
-        round's broadcast is destroyed before a new one is created
-        (no broadcast accretion over a long crawl)."""
         if self._bloom_bc is not None:
             self._bloom_bc.destroy()
             self._bloom_bc = None
-        if self.pbloom is not None:
-            from .bloom import partitioned_prefilter
-
-            out = partitioned_prefilter(
-                df, self._bloom_key(), self.pbloom, self.spark, out_col="_maybe_seen"
-            )
-            return out
-        from .bloom import make_might_contain
-
         might = make_might_contain(self.spark, self.bloom)
-        self._bloom_bc = might._bc if hasattr(might, "_bc") else None
-        return df.withColumn("_maybe_seen", might(self._bloom_key()))
+        self._bloom_bc = might._bc
+        return might
 
     def _round(self, rnd: int, meta: dict) -> None:
         cfg = self.cfg
-        f = self.frontier.read()
-        # ONE candidate exchange per round: hash-partition on url_canon
-        # alone (default shuffle.partitions), which satisfies both the
-        # dedupe groupBy's (seed_idx, url_canon) clustered distribution
-        # (subset key) and the seen anti-join's co-partitioning — without
-        # it Catalyst re-shuffles the deduped candidates a second time
-        # for the join (the r3 scaling breakdown's 0.30-efficiency
-        # stage; bench_core carries the same fix with the bucketed-seen
-        # layout that removes the seen-side exchange too).
-        cand = dedupe_first_occurrence(f.repartition("url_canon"))
-        seen_df = self.seen.read(meta["seen_v"]).select("seed_idx", "url_canon")
-
-        # J2 Bloom prefilter: definitely-new rows skip the exact anti-join.
-        # Saturation guard: a fixed-size filter fills as the seen set
-        # grows; past BloomConfig.max_fpp its probe is (near-)pure
-        # overhead — everything flows to the exact anti-join anyway — so
-        # the round BYPASSES it instead of paying hash work for nothing.
-        # Bypass never affects results (the prefilter is advisory; the
-        # anti-join below is exact either way).  est_fpp is O(1) from the
-        # filter's maintained insertion count.
-        tagged = None
-        use_prefilter = (self.bloom is not None or self.pbloom is not None) and rnd > 0
-        if use_prefilter:
-            flt = self.bloom if self.bloom is not None else self.pbloom
-            est = getattr(flt, "est_fpp", None)
+        # Saturation guard for the J2 prefilter: a fixed-size filter fills
+        # as the seen set grows; past BloomConfig.max_fpp its probe is
+        # (near-)pure overhead — everything flows to the exact anti-join
+        # anyway — so the round BYPASSES it instead of paying hash work
+        # for nothing.  Bypass never affects results (the prefilter is
+        # advisory; the anti-join is exact either way).  est_fpp is O(1)
+        # from the filter's maintained insertion count.
+        flt = None
+        if (self.bloom is not None or self.pbloom is not None) and rnd > 0:
+            est = getattr(self.bloom if self.bloom is not None else self.pbloom, "est_fpp", None)
             if est is not None and est() > cfg.bloom.max_fpp:
-                use_prefilter = False
                 self.prefilter_bypassed_rounds.append(rnd)
-        if use_prefilter and self.pbloom is not None:
-            # partitioned mode keeps the split+persist form: the probe
-            # repartitions on the key's SHARD (co-partitioned with the
-            # filter files), so bloom-negative rows must be separated
-            # BEFORE the anti-join or the whole batch would pay a second
-            # exchange back to url_canon; persist stops the two branches
-            # recomputing the dedupe/probe chain
-            tagged = self._bloom_might_contain(cand).persist()
-            sure_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-            maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            survivors = sure_new.unionByName(
-                maybe.join(seen_df, ["seed_idx", "url_canon"], "left_anti")
-            )
-        elif use_prefilter:
-            # broadcast mode folds the Bloom verdict INTO the anti-join
-            # condition: a left-anti row survives when no seen row
-            # matches (keys AND _maybe_seen), so bloom-negatives pass
-            # through without probing the join hash table — identical
-            # rows to the split form but one streaming pipeline with no
-            # persist (the split's full-batch materialization was the
-            # measured 16-thread memory wall; BENCH/BASELINE.md) and no
-            # partitioning change (the probe is a broadcast UDF column).
-            t = self._bloom_might_contain(cand)
-            survivors = t.join(
-                seen_df,
-                (t["seed_idx"] == seen_df["seed_idx"])
-                & (t["url_canon"] == seen_df["url_canon"])
-                & t["_maybe_seen"],
-                "left_anti",
-            ).drop("_maybe_seen")
-        else:
-            survivors = cand.join(seen_df, ["seed_idx", "url_canon"], "left_anti")
-
-        if self.rules is not None:
-            survivors = robots_mod.apply_robots(survivors, self.rules)
-
-        # W1 politeness budget
-        deferred = None
-        if cfg.budget_mode == "per_host":
-            sched_pre, deferred = self._schedule_budget(survivors)
-        else:
-            sched_pre = survivors
+            else:
+                flt = self.pbloom if self.pbloom is not None else self._bloom_probe()
+        sched_pre, deferred = schedule_round(
+            self.frontier.read(), self.seen.read(meta["seen_v"]), cfg, self.rules, flt
+        )
 
         sched_pre = sched_pre.withColumn("round", F.lit(rnd).cast("int"))
         seq_bases = {int(k): int(v) for k, v in meta.get("seq", {}).items()}
@@ -454,7 +526,7 @@ class CrawlEngine:
                     fut_bloom = self._pool.submit(self._bloom_broadcast_update, batch, rnd)
                 elif self.pbloom is not None:
                     fut_bloom = self._pool.submit(
-                        self.pbloom.update, batch.withColumn("_bk", self._bloom_key()), "_bk"
+                        self.pbloom.update, batch.withColumn("_bk", bloom_key()), "_bk"
                     )
 
                 seen_v = self.seen.append(newseen)
@@ -536,7 +608,7 @@ class CrawlEngine:
 
     def _bloom_broadcast_update(self, batch: DataFrame, rnd: int) -> int:
         partials = build_partials(
-            batch.withColumn("_bk", self._bloom_key()),
+            batch.withColumn("_bk", bloom_key()),
             "_bk",
             self.bloom.n_bits,
             self.bloom.n_hashes,
@@ -545,66 +617,6 @@ class CrawlEngine:
         merge_partials_into(self.bloom, partials)
         self.bloom.save(self._bloom_dir(rnd + 1))
         return rnd + 1
-
-    # -- W1 ------------------------------------------------------------------
-
-    def _schedule_budget(self, survivors: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Per-host priority rank + crawl-delay budget (north_rule): the
-        budget is fetches allowed per scheduling tick, max(1,
-        tick_seconds / crawl_delay); rank order is the global FIFO
-        priority (seed_idx, parent_seq, link_idx) [REF ordering].
-
-        Scale shape: the budget only BINDS on hosts holding more rows
-        than their budget — everything else is scheduled whole with no
-        window at all (no sort, no skewed straggler).  Over-budget hosts
-        take the salted two-phase top-k (phase 1 bounds every window
-        partition to <= budget rows; the hot host costs salt_buckets
-        parallel sorts plus one bounded merge); their unscheduled rows
-        defer to the next round via an anti-join on the (small,
-        broadcastable) scheduled set."""
-        cfg = self.cfg
-        if self.rules is not None:
-            delays = robots_mod.host_delays(self.rules, cfg.default_crawl_delay)
-            survivors = survivors.join(F.broadcast(delays), "host", "left")
-            delay = F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_crawl_delay))
-        else:
-            delay = F.lit(cfg.default_crawl_delay)
-        budget = F.greatest(F.lit(1), F.floor(F.lit(cfg.tick_seconds) / delay)).cast("int")
-        # per-host row counts: NO broadcast hint — at web scale the host
-        # dimension is 10^7+, so AQE must pick broadcast vs shuffle from
-        # the actual aggregate size (tiny here, huge in production)
-        counts = survivors.groupBy("host").agg(F.count(F.lit(1)).alias("_hn"))
-        s = (
-            survivors.withColumn("_budget", budget)
-            .join(counts, "host")
-            .persist()
-        )
-        drop_cols = ["_budget", "_hn"] + (["crawl_delay"] if self.rules is not None else [])
-        light = s.filter(F.col("_hn") <= F.col("_budget")).drop(*drop_cols)
-        heavy = s.filter(F.col("_hn") > F.col("_budget"))
-        salt = F.pmod(F.xxhash64("url_canon"), F.lit(cfg.salt_buckets))
-        w1 = Window.partitionBy("host", "_salt").orderBy("seed_idx", "parent_seq", "link_idx")
-        phase1 = (
-            heavy.withColumn("_salt", salt)
-            .withColumn("_rk1", F.row_number().over(w1))
-            .filter(F.col("_rk1") <= F.col("_budget"))
-        )
-        w2 = Window.partitionBy("host").orderBy("seed_idx", "parent_seq", "link_idx")
-        sched_heavy = (
-            phase1.withColumn("_rk2", F.row_number().over(w2))
-            .filter(F.col("_rk2") <= F.col("_budget"))
-            .drop("_salt", "_rk1", "_rk2")
-        )
-        # scheduled-heavy keys are budget-bounded per host; AQE picks
-        # broadcast when they fit (no hard hint — heavy-host count is
-        # unbounded in principle)
-        deferred = heavy.join(
-            sched_heavy.select("seed_idx", "url_canon"),
-            ["seed_idx", "url_canon"],
-            "left_anti",
-        ).drop(*drop_cols)
-        sched = light.unionByName(sched_heavy.drop(*drop_cols))
-        return sched, deferred
 
     # -- result accessors ----------------------------------------------------
 

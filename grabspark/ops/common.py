@@ -19,11 +19,13 @@ def memo_key(spark: SparkSession, sf: str, src_name: str, *caches: dict) -> tupl
     stay bounded and never serve stale frames (ADVICE r3).  mtime_ns +
     size (ADVICE r4) instead of float mtime: second-granularity
     filesystems can rewrite a fixture in-place without moving the float
-    clock, and the size catches same-nanosecond rewrites too.  Evicted
-    values are unpersisted when their session still runs — eviction
-    must release the block-manager storage the localCheckpoint holds,
-    not just the dict slot (dead-session entries have no storage left
-    to free; errors are tolerated)."""
+    clock, and the size catches same-nanosecond rewrites too.  Eviction
+    drops the dict's reference, and that is what frees a
+    localCheckpoint-ed frame's blocks: ``unpersist()`` does not release
+    checkpoint blocks; the ContextCleaner removes them once the frame
+    is garbage-collected.  ``unpersist()`` is still called so plainly
+    persisted values free their storage at once (dead-session entries
+    have no storage left to free; errors are tolerated)."""
     tok = session_token(spark)
     path = os.path.normpath(sf)
     src = os.path.join(path, src_name)

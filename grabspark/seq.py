@@ -78,11 +78,17 @@ def assign_fetch_seq_counted(
 
 
 def _base_expr(seq_bases: dict[int, int]):
-    expr = F.lit(0)
-    for seed, base in seq_bases.items():
-        if base:
-            expr = F.when(F.col("seed_idx") == seed, F.lit(base)).otherwise(expr)
-    return expr
+    """Per-seed numbering base as ONE flat literal-map lookup (0 for seeds
+    without a base).  A CASE WHEN chain nests one level per seed, and
+    Catalyst's recursive tree walks overflow the JVM stack at a few
+    hundred seeds."""
+    kv = [
+        c for seed, base in seq_bases.items() if base
+        for c in (F.lit(seed), F.lit(base).cast("long"))
+    ]
+    if not kv:
+        return F.lit(0)
+    return F.coalesce(F.element_at(F.create_map(*kv), F.col("seed_idx")), F.lit(0))
 
 
 def _assign_window(df: DataFrame, seq_bases: dict[int, int]) -> DataFrame:

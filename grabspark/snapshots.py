@@ -12,8 +12,12 @@ would provide, so a real Iceberg catalog can replace it by config when a
 jar is present.
 
 Commit protocol: data files are written first, the manifest next, and the
-CURRENT pointer last via ``os.replace`` (atomic on POSIX).  A crash
-between steps leaves orphan data files but never a torn table.  On a real
+CURRENT pointer last via ``os.replace`` (atomic on POSIX).  The manifest
+is created exclusively, so a second writer committing on the same parent
+gets ``CommitConflict`` instead of silently replacing a version.  A crash
+between steps leaves orphan data files but never a torn table (a crash
+between the manifest and CURRENT also makes the next commit raise
+``CommitConflict``, so the leftover manifest is never overwritten).  On a real
 cluster the same protocol works against any filesystem with atomic rename
 (HDFS) or conditional put (S3).
 """
@@ -29,6 +33,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+class CommitConflict(RuntimeError):
+    """Another writer already committed the snapshot version this commit
+    was about to write."""
 
 
 def _serialized(fn):
@@ -121,7 +130,16 @@ class SnapshotTable:
             "schema": json.loads(self._schema.json()) if self._schema else None,
         }
         mpath = os.path.join(self.path, "snapshots", f"v{v}.json")
-        with open(mpath, "w") as f:
+        # O_EXCL create is the optimistic commit: of two writers on the
+        # same parent (two drivers on one run_dir) exactly one wins
+        try:
+            f = open(mpath, "x")
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot v{v} of {self.path} already exists: another writer "
+                f"committed on parent v{parent}; re-read the table and retry"
+            ) from None
+        with f:
             json.dump(manifest, f)
         tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:

@@ -138,13 +138,15 @@ def test_image_caption_dedup_reads_signature_columns_only(spark):
 
 
 def test_single_url_parse_pass_in_bench_round(spark):
-    """The combined url_parts UDF must evaluate ONCE per row even though
-    three fields are projected out of its struct (CollapseProject does
-    not duplicate non-cheap PythonUDFs)."""
+    """The combined url_parts UDF must evaluate ONCE per row through the
+    scheduling round (engine.schedule_round, as the frontier bench runs
+    it) even though three fields are projected out of its struct
+    (CollapseProject does not duplicate non-cheap PythonUDFs)."""
     import re
 
     from grabspark import udfs
-    from grabspark.extract import dedupe_first_occurrence
+    from grabspark.config import EngineConfig
+    from grabspark.engine import schedule_round
 
     df = spark.createDataFrame(
         [(0, "http://h.test/p/", 1, 0, 0)],
@@ -155,7 +157,11 @@ def test_single_url_parse_pass_in_bench_round(spark):
         .select("*", "_p.url_canon", "_p.host", "_p.fetch_key")
         .drop("_p")
     )
-    p = plan(dedupe_first_occurrence(out))
+    seen = spark.createDataFrame([], "seed_idx int, url_canon string")
+    cfg = EngineConfig(run_dir="", store_path="")
+    sched, deferred = schedule_round(out, seen, cfg)
+    assert deferred is None
+    p = plan(sched)
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1
 
 
@@ -289,17 +295,22 @@ def test_bucketed_seen_join_has_no_exchange_on_big_side(spark, tmp_path):
 
 
 def test_frontier_round_prefix_is_one_exchange(spark, tmp_path):
-    """The bench round's candidate stream must shuffle ONCE: the explicit
-    url_canon repartition feeds both the dedupe aggregate (subset-key
-    ClusteredDistribution) and the anti-join against the url_canon-
-    bucketed seen table (co-partitioned).  Without the repartition,
-    Catalyst plans two full candidate shuffles — the r3 (4,16) scaling
-    breakdown's 0.30-efficiency stage."""
+    """The scheduling round's candidate stream must shuffle ONCE: the
+    url_canon repartition in engine.schedule_round feeds both the dedupe
+    aggregate (subset-key ClusteredDistribution) and the anti-join
+    against the url_canon-bucketed seen table (co-partitioned when
+    shuffle.partitions equals the bucket count, as the frontier bench
+    sets it).  Without the repartition, Catalyst plans two full
+    candidate shuffles — the r3 (4,16) scaling breakdown's
+    0.30-efficiency stage."""
     import re
 
     from grabspark import bench_core, udfs
-    from grabspark.extract import dedupe_first_occurrence
+    from grabspark.config import EngineConfig
+    from grabspark.engine import schedule_round
 
+    old_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(bench_core.N_BUCKETS))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
@@ -307,21 +318,19 @@ def test_frontier_round_prefix_is_one_exchange(spark, tmp_path):
         bench_core.write_bucketed(
             bench_core.synth_seen_df(spark, 2000, 2000, 16), name, path, ["url_canon"]
         )
-        seen = spark.table(name).select("seed_idx", "url_canon")
         cand = (
             bench_core.synth_candidates(spark, 1000, 16)
             .withColumn("_p", udfs.url_parts_udf(F.col("url")))
             .select("*", "_p.url_canon", "_p.host", "_p.fetch_key")
             .drop("_p")
-            .repartition(bench_core.N_BUCKETS, "url_canon")
         )
-        j = dedupe_first_occurrence(cand).join(
-            seen, ["seed_idx", "url_canon"], "left_anti"
-        )
-        p = plan(j)
+        cfg = EngineConfig(run_dir="", store_path="")
+        sched, _ = schedule_round(cand, spark.table(name), cfg)
+        p = plan(sched)
         assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
         assert "Bucketed: true" in p
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_partitions)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
         spark.sql(f"DROP TABLE IF EXISTS {name}")
