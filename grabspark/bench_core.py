@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 from . import udfs
 from .bloom import (
     ShardedBloom,
+    broadcast_might_contain,
     build_partials,
-    make_might_contain,
     merge_partials_into,
     reduce_partials,
 )
@@ -276,7 +276,7 @@ def run_frontier_round(
         .select("*", "_p.url_canon", "_p.host", "_p.fetch_key")
         .drop("_p")
     )
-    might = make_might_contain(spark, bl) if bl is not None else None
+    might = broadcast_might_contain(spark, bl) if bl is not None else None
     sched, _deferred = schedule_round(cand, seen, cfg, None, might)
     if store is not None:
         sched = sched.join(

@@ -20,9 +20,10 @@ class BloomConfig:
     # co-partitioned with the key space — build, merge, and probe all run
     # executor-side on single shards; the scale mode for 10^10 keys where
     # the filter is ~12 GB and must never sit on one node (bloom.py
-    # PartitionedBloom).  "cuckoo": same sharded/manifested layout but a
-    # cuckoo filter (cuckoo.PartitionedCuckoo) — supports per-key DELETE
-    # for TTL re-crawl (n_bits is reinterpreted as a 16-bit-slot budget).
+    # PartitionedBloom).  "cuckoo": the same sharded-filter core
+    # (bloom.PartitionedFilter: manifests, update job, probe) with cuckoo
+    # kernels (cuckoo.PartitionedCuckoo) — supports per-key DELETE for
+    # TTL re-crawl (n_bits is reinterpreted as a 16-bit-slot budget).
     mode: str = "broadcast"
     # saturation guard: when the filter's estimated false-positive rate
     # (from its insertion count) exceeds this, the engine BYPASSES the

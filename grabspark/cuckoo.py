@@ -9,11 +9,12 @@ must remove expired URLs from the seen side; with Bloom that means
 rebuilding the filter, with cuckoo it is a per-key delete that mirrors
 the snapshot table's ``delete_where``.
 
-Shape (standard cuckoo, sharded like PartitionedBloom):
+Shape (standard cuckoo, sharded by ``bloom.PartitionedFilter``):
 
 * each key routes to exactly one shard (``bloom.shard_of`` — the same
-  routing as the Bloom shards, so the two filters are drop-in
-  replacements for each other in ``partitioned_prefilter``);
+  routing as the Bloom shards; the two kinds share one manifest, update
+  job and probe, so they are drop-in replacements for each other in
+  ``partitioned_prefilter`` and the engine's prefilter slot);
 * a shard is a ``(n_buckets, bucket_size)`` uint16 table of 16-bit
   fingerprints (0 = empty). fp and both candidate buckets derive from
   the key's stable siphashes; ``i2 = i1 XOR h(fp)`` (partial-key
@@ -36,23 +37,15 @@ deterministic even though shard file bytes may differ run-to-run.
 False-positive rate ~ 2*bucket_size / 2^16 (~0.012% at bucket_size 4);
 false negatives are impossible for inserted-and-not-deleted keys.
 
-Versioned {shard: filename} manifests (identical plumbing to
-PartitionedBloom) give immutable files + atomic CURRENT + rollback for
-exact resume.  The driver only ever sees shard ids and filenames.
+The driver only ever sees shard ids and filenames.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from .bloom import _shard_cache, key_hashes, shard_of
+from .bloom import PartitionedFilter, key_hashes
 
 BUCKET_SIZE = 4
 MAX_KICKS = 500
@@ -140,210 +133,37 @@ def _contains_in(table: np.ndarray, fp: np.ndarray, i1: np.ndarray, i2: np.ndarr
     return (table[i1] == f).any(axis=1) | (table[i2] == f).any(axis=1)
 
 
-class PartitionedCuckoo:
-    """A cuckoo filter split into ``n_shards`` independent per-shard
-    fingerprint tables with PartitionedBloom's data/metadata split:
-    executor tasks write immutable shard .npy files, the driver commits
-    only {shard: filename} manifests.  Capacity per shard is
-    ``n_buckets * BUCKET_SIZE`` slots; keep load under ~0.95."""
+class PartitionedCuckoo(PartitionedFilter):
+    """Cuckoo kind: a shard is an ``(n_buckets, BUCKET_SIZE)`` uint16
+    fingerprint table.  Capacity per shard is ``n_buckets * BUCKET_SIZE``
+    slots; keep load under ~0.95."""
+
+    _PARAMS = ("n_buckets",)
 
     def __init__(self, dirpath: str, n_buckets: int = 1 << 12, n_shards: int = 16):
         assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of two"
-        self.dirpath = dirpath
+        super().__init__(dirpath, n_shards)
         self.n_buckets = int(n_buckets)
-        self.n_shards = int(n_shards)
 
-    # -- manifest plumbing (same protocol as PartitionedBloom) --------------
+    def _empty(self) -> np.ndarray:
+        return np.zeros((self.n_buckets, BUCKET_SIZE), dtype=np.uint16)
 
-    def _manifest_path(self, v: int) -> str:
-        return os.path.join(self.dirpath, f"manifest-v{v}.json")
+    def _hash(self, keys: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        return _fp_and_buckets(keys, self.n_buckets)
 
-    def _current_path(self) -> str:
-        return os.path.join(self.dirpath, "CURRENT")
+    def _insert(self, table: np.ndarray, h) -> int:
+        return _insert_into(table, *h)
 
-    def current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+    def _delete(self, table: np.ndarray, h) -> int:
+        return _delete_from(table, *h)
 
-    def manifest(self, version: int | None = None) -> dict | None:
-        v = self.current_version() if version is None else version
-        if v is None:
-            return None
-        with open(self._manifest_path(v)) as f:
-            return json.load(f)
-
-    def shard_files(self, version: int | None = None) -> dict[int, str]:
-        m = self.manifest(version)
-        if m is None:
-            return {}
-        return {int(s): os.path.join(self.dirpath, "files", f) for s, f in m["shards"].items()}
-
-    def _commit(self, shards: dict[int, str], parent: int | None) -> int:
-        v = 0 if parent is None else parent + 1
-        m = {
-            "version": v,
-            "parent": parent,
-            "n_buckets": self.n_buckets,
-            "n_shards": self.n_shards,
-            "bucket_size": BUCKET_SIZE,
-            "shards": {str(s): f for s, f in sorted(shards.items())},
-        }
-        with open(self._manifest_path(v), "w") as f:
-            json.dump(m, f)
-        tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._current_path())
-        return v
-
-    def create(self) -> int:
-        os.makedirs(os.path.join(self.dirpath, "files"), exist_ok=True)
-        if self.current_version() is None:
-            return self._commit({}, None)
-        return self.current_version()
-
-    def rollback(self, version: int) -> int:
-        m = self.manifest(version)
-        if m is None:
-            raise ValueError(f"no PartitionedCuckoo manifest v{version} in {self.dirpath}")
-        cur = self.current_version()
-        if cur == version:
-            return cur
-        return self._commit({int(s): f for s, f in m["shards"].items()}, cur)
-
-    @classmethod
-    def load(cls, dirpath: str) -> "PartitionedCuckoo":
-        with open(os.path.join(dirpath, "CURRENT")) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(dirpath, f"manifest-v{v}.json")) as f:
-            m = json.load(f)
-        return cls(dirpath, m["n_buckets"], m["n_shards"])
-
-    # -- distributed update / delete ----------------------------------------
-
-    def _apply(self, keys_df, key_col: str, op: str) -> int:
-        """One shuffle (repartition by shard); each task loads its shards'
-        parent files, inserts or deletes its keys, writes new immutable
-        files; the driver commits the manifest."""
-        parent = self.current_version()
-        if parent is None:
-            parent = self.create()
-        parent_files = {s: os.path.basename(p) for s, p in self.shard_files(parent).items()}
-        files_dir = os.path.join(self.dirpath, "files")
-        n_buckets, n_shards = self.n_buckets, self.n_shards
-        pf = dict(parent_files)
-
-        shard_udf = F.pandas_udf(lambda s: pd.Series(shard_of(s, n_shards)), "long")
-
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tables: dict[int, np.ndarray] = {}
-            bad = 0
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                keys = pdf[key_col]
-                shards = pdf["_shard"].to_numpy()
-                fp, i1, i2 = _fp_and_buckets(keys, n_buckets)
-                for s in np.unique(shards):
-                    s = int(s)
-                    t = tables.get(s)
-                    if t is None:
-                        prev = pf.get(s)
-                        if prev is not None:
-                            t = np.load(os.path.join(files_dir, prev)).copy()
-                        else:
-                            t = np.zeros((n_buckets, BUCKET_SIZE), dtype=np.uint16)
-                        tables[s] = t
-                    m = shards == s
-                    if op == "insert":
-                        bad += _insert_into(t, fp[m], i1[m], i2[m])
-                    else:
-                        bad += _delete_from(t, fp[m], i1[m], i2[m])
-            out_shards, out_files = [], []
-            for s, t in tables.items():
-                fname = f"s{s}-{uuid.uuid4().hex}.npy"
-                np.save(os.path.join(files_dir, fname), t)
-                out_shards.append(s)
-                out_files.append(fname)
-            if out_shards or bad:
-                yield pd.DataFrame(
-                    {"shard": out_shards + [-1] * (1 if bad else 0),
-                     "file": out_files + [str(bad)] * (1 if bad else 0)}
-                )
-
-        touched = (
-            keys_df.select(F.col(key_col))
-            .withColumn("_shard", shard_udf(F.col(key_col)))
-            .repartition(self.n_shards, "_shard")
-            .mapInPandas(gen, schema="shard long, file string")
-            .collect()  # tiny: (shard id, filename) rows only — no table bytes
-        )
-        bad_total = sum(int(r["file"]) for r in touched if r["shard"] == -1)
-        if bad_total:
-            raise RuntimeError(
-                f"cuckoo {op} failed for {bad_total} keys "
-                f"(shard over capacity or delete of a never-inserted key)"
-            )
-        shards = dict(parent_files)
-        for row in touched:
-            if row["shard"] >= 0:
-                shards[int(row["shard"])] = row["file"]
-        return self._commit(shards, parent)
-
-    def update(self, keys_df, key_col: str) -> int:
-        return self._apply(keys_df, key_col, "insert")
+    def _contains(self, table: np.ndarray, h) -> np.ndarray:
+        return _contains_in(table, *h)
 
     def delete(self, keys_df, key_col: str) -> int:
-        return self._apply(keys_df, key_col, "delete")
-
-    # -- map-side probe ------------------------------------------------------
-
-    def make_contains(self, spark):
-        """Arrow membership UDF reading per-shard files lazily with the
-        process-level cache; pair with a shard repartition (the same
-        ``partitioned_prefilter`` shape as the Bloom probe)."""
-        from pyspark.sql.types import BooleanType
-
-        files = {s: os.path.basename(p) for s, p in self.shard_files().items()}
-        payload = {
-            "files_dir": os.path.join(self.dirpath, "files"),
-            "files": files,
-            "n_buckets": self.n_buckets,
-            "n_shards": self.n_shards,
-        }
-        bc = spark.sparkContext.broadcast(payload)
-
-        @F.pandas_udf(BooleanType())
-        def contains(keys: pd.Series) -> pd.Series:
-            p = bc.value
-            cache = _shard_cache()
-            shards = shard_of(keys, p["n_shards"])
-            fp, i1, i2 = _fp_and_buckets(keys, p["n_buckets"])
-            hit = np.zeros(len(keys), dtype=bool)
-            for s in np.unique(shards):
-                s = int(s)
-                fname = p["files"].get(str(s), p["files"].get(s))
-                if fname is None:
-                    continue  # empty shard: definitely not present
-                path = os.path.join(p["files_dir"], fname)
-                table = cache.get(path)
-                if table is None:
-                    table = np.load(path)
-                    cache[path] = table
-                m = shards == s
-                hit[m] = _contains_in(table, fp[m], i1[m], i2[m])
-            return pd.Series(hit)
-
-        contains._bc = bc
-        return contains
-
-    # drop-in for PartitionedBloom in bloom.partitioned_prefilter and the
-    # engine's prefilter slot (identical create/rollback/update/probe
-    # surface — the filters interchange behind BloomConfig.mode)
-    make_might_contain = make_contains
+        """Remove one copy of each key, executor-side; returns the new
+        version."""
+        return self._apply(keys_df, key_col, "_delete", -1)
 
     @classmethod
     def sized_for_bits(cls, dirpath: str, n_bits: int, n_shards: int) -> "PartitionedCuckoo":

@@ -84,8 +84,9 @@ def schedule_round(
     link_idx (other columns ride along); ``seen`` needs seed_idx and
     url_canon.  ``rules`` is the robots table or None.  ``flt`` is the J2
     probe: None (no prefilter), a broadcast membership UDF
-    (``bloom.make_might_contain``), or a partitioned filter
-    (``PartitionedBloom`` / ``PartitionedCuckoo``)."""
+    (``bloom.broadcast_might_contain``), or a partitioned filter
+    (``bloom.PartitionedFilter``: ``PartitionedBloom`` or
+    ``PartitionedCuckoo``)."""
     # ONE candidate exchange per round (but see the broadcast Bloom
     # form below): hash-partition on url_canon
     # alone (default shuffle.partitions), which satisfies both the
@@ -239,8 +240,8 @@ class CrawlEngine:
         )
         self.bloom: ShardedBloom | None = None
         # partitioned seen filter (mode "partitioned" -> PartitionedBloom,
-        # mode "cuckoo" -> PartitionedCuckoo): identical create/rollback/
-        # update/probe surface, so every engine path below is shared
+        # mode "cuckoo" -> PartitionedCuckoo): both are one
+        # bloom.PartitionedFilter core, so every engine path below is shared
         self.pbloom = None
         if cfg.bloom.enabled:
             if cfg.bloom.mode == "partitioned":
@@ -353,10 +354,10 @@ class CrawlEngine:
         deletes per-key — the capability that mode exists for; broadcast
         Bloom rebuilds from the remaining rows (the rebuild cost is why
         cuckoo is the TTL mode); partitioned Bloom can neither delete
-        nor cheaply rebuild in place -> ValueError directing to cuckoo.
+        nor cheaply rebuild in place -> ValueError directing to cuckoo,
+        raised before anything is written.
         """
         from . import udfs
-        from .cuckoo import PartitionedCuckoo
 
         meta = dict(self.frontier.meta() or {})
         if not meta:
@@ -369,16 +370,17 @@ class CrawlEngine:
         if n_exp == 0:
             expired.unpersist()
             return self.run()
-        seen_v = self.seen.delete_where(cond)
-        bloom_v = int(meta["bloom_v"])
-        if isinstance(self.pbloom, PartitionedCuckoo):
-            bloom_v = self.pbloom.delete(
-                expired.withColumn("_bk", bloom_key()), "_bk"
-            )
-        elif self.pbloom is not None:
+        if self.pbloom is not None and not hasattr(self.pbloom, "delete"):
+            expired.unpersist()
             raise ValueError(
                 "partitioned Bloom cannot delete keys; use "
                 "BloomConfig(mode='cuckoo') for TTL re-crawl"
+            )
+        seen_v = self.seen.delete_where(cond)
+        bloom_v = int(meta["bloom_v"])
+        if self.pbloom is not None:
+            bloom_v = self.pbloom.delete(
+                expired.withColumn("_bk", bloom_key()), "_bk"
             )
         elif self.bloom is not None:
             fresh = ShardedBloom(self.bloom.n_bits, self.bloom.n_hashes, self.bloom.n_shards)
@@ -448,12 +450,12 @@ class CrawlEngine:
         """Broadcast membership UDF over the current filter.  The previous
         round's broadcast is destroyed before a new one is created (no
         broadcast accretion over a long crawl)."""
-        from .bloom import make_might_contain
+        from .bloom import broadcast_might_contain
 
         if self._bloom_bc is not None:
             self._bloom_bc.destroy()
             self._bloom_bc = None
-        might = make_might_contain(self.spark, self.bloom)
+        might = broadcast_might_contain(self.spark, self.bloom)
         self._bloom_bc = might._bc
         return might
 

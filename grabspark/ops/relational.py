@@ -123,7 +123,7 @@ def bloom_prefilter_antijoin(spark: SparkSession, sf: str) -> DataFrame:
     Bloom prefilter — proves the filter is advisory (no lost/extra rows).
     Definitely-new rows skip the exact anti-join; maybe-seen rows flow
     through it."""
-    from ..bloom import ShardedBloom, build_partials, make_might_contain, merge_partials_into
+    from ..bloom import ShardedBloom, broadcast_might_contain, build_partials, merge_partials_into
 
     c = T(spark, sf, "customer")
     o = T(spark, sf, "orders")
@@ -135,7 +135,7 @@ def bloom_prefilter_antijoin(spark: SparkSession, sf: str) -> DataFrame:
         "_bk", bl.n_bits, bl.n_hashes, bl.n_shards,
     ).collect()
     merge_partials_into(bl, partials)
-    might = make_might_contain(spark, bl)
+    might = broadcast_might_contain(spark, bl)
     tagged = c.withColumn("_maybe", might(F.col("c_custkey").cast("string")))
     sure_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
     maybe = tagged.filter(F.col("_maybe")).drop("_maybe")

@@ -12,8 +12,10 @@ The reference's remaining relational surface (SURVEY.md §2.5/§2.6):
   mode="partitioned"): per-shard filter files built and probed
   executor-side, co-partitioned with the key; result must equal the
   exact anti-join (advisory-filter invariant).
+* ``cuckoo_ttl_antijoin`` — the same probe through the deletable cuckoo
+  kind (BloomConfig mode="cuckoo") after TTL deletes.
 
-Each query exercises the REAL SnapshotTable/PartitionedBloom code paths
+Each query exercises the REAL SnapshotTable/PartitionedFilter code paths
 in a temp dir, then returns the resulting DataFrame for the value gate.
 """
 
@@ -146,12 +148,8 @@ def cuckoo_ttl_antijoin(spark: SparkSession, sf: str) -> DataFrame:
     result must equal the exact anti-join against the live seen set —
     "contains" rows still flow through it, deletion can only send rows
     down the definitely-new fast path."""
-    import tempfile as _tf
-
-    from ..bloom import shard_of
+    from ..bloom import partitioned_prefilter
     from ..cuckoo import PartitionedCuckoo
-
-    import pandas as pd
 
     c = T(spark, sf, "customer")
     o = T(spark, sf, "orders")
@@ -171,21 +169,13 @@ def cuckoo_ttl_antijoin(spark: SparkSession, sf: str) -> DataFrame:
     n_shards = 8
     n_buckets = 1 << max(9, (n_keys // (n_shards * 4 * 6 // 10)).bit_length())
     pc = PartitionedCuckoo(
-        _tf.mkdtemp(prefix="grabspark-pcuckoo-"), n_buckets=n_buckets, n_shards=n_shards
+        tempfile.mkdtemp(prefix="grabspark-pcuckoo-"), n_buckets=n_buckets, n_shards=n_shards
     )
     pc.create()
     pc.update(seen_keys, "_k")
     pc.delete(expired_keys, "_k")
-
-    n_shards = pc.n_shards
-    shard_udf = F.pandas_udf(lambda sr: pd.Series(shard_of(sr, n_shards)), "long")
-    contains = pc.make_contains(spark)
-    tagged = (
-        c.withColumn("_ck", F.col("c_custkey").cast("string"))
-        .withColumn("_shard", shard_udf(F.col("_ck")))
-        .repartition(n_shards, "_shard")  # probe co-partitioned with the shards
-        .withColumn("_maybe", contains(F.col("_ck")))
-        .drop("_ck", "_shard")
+    tagged = partitioned_prefilter(
+        c, F.col("c_custkey").cast("string"), pc, spark, out_col="_maybe"
     )
     sure_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
     maybe = tagged.filter(F.col("_maybe")).drop("_maybe")

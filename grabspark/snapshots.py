@@ -11,8 +11,9 @@ reads for exact resume, per-snapshot lineage/metadata — with the same
 would provide, so a real Iceberg catalog can replace it by config when a
 jar is present.
 
-Commit protocol: data files are written first, the manifest next, and the
-CURRENT pointer last via ``os.replace`` (atomic on POSIX).  The manifest
+Commit protocol (``commit_manifest``, shared with the partitioned seen
+filters in ``bloom.py``): data files are written first, the manifest
+next, and the CURRENT pointer last by an atomic rename.  The manifest
 is created exclusively, so a second writer committing on the same parent
 gets ``CommitConflict`` instead of silently replacing a version.  A crash
 between steps leaves orphan data files but never a torn table (a crash
@@ -38,6 +39,38 @@ from pyspark.sql.types import StructType
 class CommitConflict(RuntimeError):
     """Another writer already committed the snapshot version this commit
     was about to write."""
+
+
+def read_current(current_path: str) -> int | None:
+    """The version a CURRENT pointer file names, or None before the first
+    commit."""
+    try:
+        with open(current_path) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def commit_manifest(manifest_path: str, current_path: str, manifest: dict) -> int:
+    """Write ``manifest`` (which carries its ``version`` and ``parent``)
+    and point CURRENT at it; returns the version.  The O_EXCL create is
+    the optimistic commit: of two writers on the same parent (two drivers
+    on one run_dir) exactly one wins, the other gets ``CommitConflict``."""
+    v = manifest["version"]
+    try:
+        f = open(manifest_path, "x")
+    except FileExistsError:
+        raise CommitConflict(
+            f"version v{v} already exists ({manifest_path}): another writer "
+            f"committed on parent v{manifest['parent']}; re-read and retry"
+        ) from None
+    with f:
+        json.dump(manifest, f)
+    tmp = current_path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(str(v))
+    os.replace(tmp, current_path)
+    return v
 
 
 def _serialized(fn):
@@ -86,11 +119,7 @@ class SnapshotTable:
         return os.path.join(self.path, "CURRENT")
 
     def current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        return read_current(self._current_path())
 
     def manifest(self, version: int | None = None) -> dict | None:
         v = self.current_version() if version is None else version
@@ -129,23 +158,9 @@ class SnapshotTable:
             "parts": parts or {},
             "schema": json.loads(self._schema.json()) if self._schema else None,
         }
-        mpath = os.path.join(self.path, "snapshots", f"v{v}.json")
-        # O_EXCL create is the optimistic commit: of two writers on the
-        # same parent (two drivers on one run_dir) exactly one wins
-        try:
-            f = open(mpath, "x")
-        except FileExistsError:
-            raise CommitConflict(
-                f"snapshot v{v} of {self.path} already exists: another writer "
-                f"committed on parent v{parent}; re-read the table and retry"
-            ) from None
-        with f:
-            json.dump(manifest, f)
-        tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._current_path())
-        return v
+        return commit_manifest(
+            os.path.join(self.path, "snapshots", f"v{v}.json"), self._current_path(), manifest
+        )
 
     # -- writes --------------------------------------------------------------
 

@@ -1,6 +1,6 @@
-"""Two robustness guards: a second writer on one snapshot table gets a
-clear conflict instead of a lost version, and fetch_seq numbering holds
-with hundreds of per-seed bases."""
+"""Two robustness guards: a second writer on one snapshot table or
+partitioned seen filter gets a clear conflict instead of a lost version,
+and fetch_seq numbering holds with hundreds of per-seed bases."""
 
 import pytest
 
@@ -31,6 +31,45 @@ def test_second_writer_on_same_parent_conflicts(spark, tmp_path):
     assert fresh.current_version() == v1
     assert fresh.meta()["by"] == "a"
     assert sorted(r.x for r in fresh.read().collect()) == [1, 2]
+
+
+def _filter(kind: str, path: str):
+    from grabspark.bloom import PartitionedBloom
+    from grabspark.cuckoo import PartitionedCuckoo
+
+    if kind == "bloom":
+        return PartitionedBloom(path, n_bits=1 << 14, n_hashes=5, n_shards=4)
+    return PartitionedCuckoo(path, n_buckets=1 << 8, n_shards=4)
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_second_filter_writer_on_same_parent_conflicts(spark, tmp_path, kind):
+    """Two drivers on one partitioned seen-filter directory: both update
+    on parent v0.  The first commit lands; the second raises
+    CommitConflict, and the landed version's shard files still read
+    back (every key of the first writer probes true)."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / kind)
+    keys = lambda p: spark.createDataFrame([(f"{p}{i}",) for i in range(200)], "k string")
+    a, b = _filter(kind, path), _filter(kind, path)
+    v0 = a.create()
+    assert b.current_version() == v0
+    # b read CURRENT before a's update landed
+    b.current_version = lambda: v0
+
+    v1 = a.update(keys("a"), "k")
+    assert v1 == v0 + 1
+    landed = a.shard_files(v1)
+    with pytest.raises(CommitConflict, match=f"v{v1}"):
+        b.update(keys("b"), "k")
+
+    fresh = type(a).load(path)
+    assert fresh.current_version() == v1
+    assert fresh.shard_files() == landed
+    assert fresh.n_inserted == 200
+    might = fresh.make_might_contain(spark)
+    assert all(r.hit for r in keys("a").withColumn("hit", might(F.col("k"))).collect())
 
 
 def test_fetch_seq_with_500_seed_bases(spark):

@@ -43,7 +43,7 @@ def test_update_delete_contains(spark, tmp_path):
     v_full = pc.current_version()
     pc.delete(df(B), "k")
 
-    contains = pc.make_contains(spark)
+    contains = pc.make_might_contain(spark)
     res = {
         r["k"]: r["hit"]
         for r in df(A + B + C).withColumn("hit", contains(F.col("k"))).collect()
@@ -56,7 +56,7 @@ def test_update_delete_contains(spark, tmp_path):
 
     # rollback to pre-delete: B is contained again (exact resume)
     pc.rollback(v_full)
-    contains2 = pc.make_contains(spark)
+    contains2 = pc.make_might_contain(spark)
     res2 = df(B).withColumn("hit", contains2(F.col("k"))).collect()
     assert all(r["hit"] for r in res2)
 

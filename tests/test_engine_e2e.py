@@ -428,6 +428,30 @@ def test_expire_and_recrawl_cuckoo(spark, crawl_setup):
     assert len(trace_after) == len(trace_before) + len(expired)
 
 
+def test_expire_partitioned_bloom_refuses_before_any_write(spark, crawl_setup):
+    """Partitioned Bloom cannot delete keys, so TTL re-crawl must raise
+    BEFORE it writes: the seen table, the frontier and the filter keep
+    their committed versions, and the next round builds on intact state."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    eng = run_engine(
+        spark,
+        store_path,
+        seeds,
+        base / "run_pbloom_ttl",
+        max_rounds=1,
+        bloom=BloomConfig(enabled=True, mode="partitioned", n_bits=1 << 16, n_shards=8),
+    )
+    seen_v, seen_rows = eng.seen.current_version(), eng.seen.row_count()
+    frontier_meta, bloom_v = eng.frontier.meta(), eng.pbloom.current_version()
+    assert seen_rows > 0
+    with pytest.raises(ValueError, match="cannot delete"):
+        eng.expire_and_recrawl(F.col("seed_idx") == 0)
+    assert eng.seen.current_version() == seen_v
+    assert eng.seen.row_count() == seen_rows
+    assert eng.frontier.meta() == frontier_meta
+    assert eng.pbloom.current_version() == bloom_v
+
+
 def test_compact_every_trace_exact_and_fewer_files(spark, crawl_setup):
     """compact_every: the crawl result is bit-identical to the golden
     trace, the side tables end with far fewer live files, and exact
